@@ -1,4 +1,5 @@
-"""Connected components over a pair graph (dedup clustering).
+"""Iterative graph operators: connected components, PageRank, label
+propagation and bounded BFS / shortest paths.
 
 Near-dup pipelines end with "group the pairs into clusters, keep one
 canonical doc per cluster" — that grouping is connected components on
@@ -7,18 +8,17 @@ the candidate-pair graph. The reference has nothing iterative
 it is also the one operator family here that genuinely cannot be a
 single Catalyst plan and needs a driver-side fixed-point loop.
 
-Scale design:
+Connected-components scale design:
 - the loop runs ONLY over nodes that appear in an edge: in a deduped
   corpus the overwhelming majority of docs are singletons whose label
   cannot change, so every per-round join/aggregate AND per-round
-  label checkpoint is sized by the pair graph, not the corpus (the
-  previous shape re-materialized a corpus-sized label frame every
-  round — the actual 100 TB killer); singletons rejoin as their own
-  component in one anti-join at the end. At bench scale this trades
-  ~0.5s of fixed extra jobs (distinct + anti-join + union) for the
-  asymptotic win — measured interleaved A/B at sf0.1: restricted
-  5.08s mean vs corpus-wide 6.09s mean (4.61 vs 4.07 steady-state
-  min),
+  label checkpoint is sized by the pair graph, not the corpus (a
+  corpus-sized label frame re-materialized every round is what breaks
+  at 100 TB); singletons rejoin as their own component in one
+  anti-join at the end. At bench scale this trades ~0.5s of fixed
+  extra jobs (distinct + anti-join + union) for the asymptotic win —
+  measured interleaved A/B at sf0.1: restricted 5.08s mean vs
+  corpus-wide 6.09s mean (4.61 vs 4.07 steady-state min),
 - each iteration is one shuffle (edge⋈label join + min-aggregate);
   label state is `localCheckpoint`ed every round so the plan/lineage
   does not grow with the iteration count (the classic iterative-Spark
@@ -28,28 +28,63 @@ Scale design:
   For adversarial long-chain graphs switch `fold_edges=True`, which
   additionally rewrites each edge endpoint to its current label
   (pointer-doubling-style contraction, O(log n) rounds on chains).
-  Measured rule of thumb (r9, sf0.1): fold pays ONLY when diameter
-  is large (geo percolation chains — required there, the plain loop
-  would exceed max_iters); on hub-dominated small-diameter graphs
-  the per-round contraction (two joins + distinct + re-symmetrize)
-  costs more than it saves — the 587k-edge bipartite co-purchase
-  graph benched 3.3-3.6s plain vs 3.8-4.2s folded, so
+  Measured at sf0.1: fold pays ONLY when diameter is large (geo
+  percolation chains — required there, the plain loop would exceed
+  max_iters); on hub-dominated small-diameter graphs the per-round
+  contraction (two joins + distinct + re-symmetrize) costs more than
+  it saves — the 587k-edge bipartite co-purchase graph benches
+  3.3-3.6s plain vs 3.8-4.2s folded, so
   graph_cc_incremental/er_resolve/dedup stay fold-free,
 - convergence is detected with a count of changed labels — one extra
-  cheap action per round on an already-checkpointed frame.
+  cheap action per round on an already-checkpointed frame; a loop
+  that exhausts ``max_iters`` before converging raises instead of
+  returning partial labels.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# pagerank/personalized_pagerank: cut the single-use rank chain's
-# lineage every N unrolled rounds. Small fixed iteration counts (the
-# catalog's 3) pipeline as one checkpoint-free job; a caller-supplied
-# large ``iters`` no longer builds a join tower whose Catalyst
-# analysis cost grows superlinearly with depth.
+from ..functions.rounding import dround
+
+# Single-use round chains (pagerank, label_propagation, the relaxation
+# loop) cut lineage every N unrolled rounds. Small fixed iteration
+# counts (the catalog's 3) pipeline as one checkpoint-free job; a
+# caller-supplied large round count does not build a join tower whose
+# Catalyst analysis cost grows superlinearly with depth.
 _CHECKPOINT_EVERY = 8
+
+
+def _cut_lineage(df: DataFrame, i: int, rounds: int) -> DataFrame:
+    """Checkpoint after every ``_CHECKPOINT_EVERY``-th round, never
+    after the last."""
+    if (i + 1) % _CHECKPOINT_EVERY == 0 and (i + 1) < rounds:
+        return df.localCheckpoint(eager=True)
+    return df
+
+
+def _symmetrize(edges: DataFrame, dedup: bool = True) -> DataFrame:
+    """Undirected view of a directed edge list (src, dst, ...): both
+    orientations, materialized once (multi-use across iteration
+    rounds). Every other column (an edge weight) rides along unchanged.
+
+    ``dedup=False`` skips the distinct — a full 2E shuffle — for
+    callers that can PROVE the mirror cannot collide: the input is
+    already distinct AND no reverse pair exists (e.g. a bipartite
+    graph whose two sides use disjoint id ranges, like the
+    customer-even / supplier-odd purchase graph), or the caller
+    tolerates duplicates (min-label propagation). Neighbor-count
+    semantics (LPA) are correct only if the edge multiset is
+    duplicate-free, so for them the flag is a caller-supplied proof,
+    not a tolerance."""
+    rest = [c for c in edges.columns if c not in ("src", "dst")]
+    sym = edges.select("src", "dst", *rest).unionByName(
+        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"), *rest)
+    )
+    if dedup:
+        sym = sym.distinct()
+    return sym.localCheckpoint(eager=True)
 
 
 def connected_components(
@@ -66,11 +101,14 @@ def connected_components(
     endpoints outside ``nodes`` are DROPPED along with the edges through
     them (enforced below), so the output is always keyed exactly by the
     ``nodes`` input and connectivity never flows through an unknown node.
+
+    Raises RuntimeError when labels are still changing after
+    ``max_iters`` rounds: a partial labeling splits components
+    silently, so the caller must raise the budget or fold edges.
     """
-    sym = edges.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionByName(
-        edges.select(F.col("b").alias("src"), F.col("a").alias("dst"))
+    sym = _symmetrize(
+        edges.select(F.col("a").alias("src"), F.col("b").alias("dst")), dedup=False
     )
-    sym = sym.localCheckpoint(eager=True)
     # iterate ONLY over nodes that appear in an edge: in a deduped
     # corpus the overwhelming majority of nodes are singletons whose
     # label can never change — keeping them out shrinks every per-round
@@ -83,12 +121,12 @@ def connected_components(
     # OUT of a stray node, and the left join back onto labels discards
     # propagation INTO one, so an edge with a stray endpoint disappears
     # entirely and its valid endpoint stays a singleton. This costs one
-    # map-only broadcast semi-join folded into the labels init that was
-    # already checkpointed (the distinct endpoint set is
+    # map-only broadcast semi-join folded into the labels init that is
+    # checkpointed anyway (the distinct endpoint set is
     # pair-graph-sized; the nodes frame is scanned once, never
-    # shuffled) — versus the previous shape's two extra eager sym
-    # checkpoints + two broadcast joins over the full edge list, which
-    # benched at +0.8s fixed cost (dedup_components 3.38→4.15s).
+    # shuffled). Rewriting sym instead costs two extra eager sym
+    # checkpoints + two broadcast joins over the full edge list
+    # (benched +0.8s fixed cost, dedup_components 3.38→4.15s).
     edge_nodes = sym.select(F.col("src").alias("node")).distinct()
     labels = (
         nodes.select(F.col(id_col).alias("node"))
@@ -133,9 +171,12 @@ def connected_components(
                 .filter(F.col("src") != F.col("dst"))
                 .distinct()
             )
-            sym = half.unionByName(
-                half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-            ).localCheckpoint(eager=True)
+            sym = _symmetrize(half, dedup=False)
+    else:
+        raise RuntimeError(
+            f"connected_components: labels still changing after max_iters={max_iters} "
+            "rounds; raise max_iters or pass fold_edges=True (O(log n) rounds)"
+        )
     # anti-join against the CHECKPOINTED labels (same node set as
     # edge_nodes) so the final job reads materialized blocks instead of
     # recomputing the distinct
@@ -152,9 +193,21 @@ def pagerank(
     damping: float = 0.85,
     iters: int = 3,
     round_to: int = 6,
+    seeds: list | None = None,
 ) -> DataFrame:
     """PageRank over a directed edge list (src, dst), fixed iteration
     count, ranks rounded to ``round_to`` decimals EVERY round.
+
+    ``seeds=None`` is classic PageRank: every node teleports (1-d) and
+    starts at rank 1. A seed list gives personalized PageRank: teleport
+    mass lands ONLY on the seeds (r' = (1-d)·1[seed] + d·Σ r/outdeg;
+    r0 = the teleport vector), so rank concentrates in the seeds'
+    neighborhoods — the recommendation / similarity-expansion variant.
+    The teleport is unnormalized (1 per seed, not 1/|S|) —
+    deterministic and mirrored in the oracle; relative ordering is
+    unaffected. Seeds enter as literals (an isin over the node column)
+    — the seed SET is query-scoped and small by definition; seeds
+    absent from the graph contribute nothing on either engine.
 
     The per-round rounding is part of the operator contract, not
     cosmetics: it re-synchronizes float state across engines (the
@@ -162,10 +215,9 @@ def pagerank(
     reorderings of the in-edge sums, exactly like the unrolled-Lloyd
     k-means oracle. Convergence is unaffected at 1e-6 granularity.
 
-    Scale design (revised round 5 after the bench showed per-round
-    eager localCheckpoints DEGRADING across reps — 9.1s → 18.0s as
-    checkpointed RDD blocks accumulated; the fix is to need no
-    per-round materialization at all):
+    Scale design: no per-round materialization. Per-round eager
+    localCheckpoints degrade across reps (benched 9.1s → 18.0s as
+    checkpointed RDD blocks accumulate), so:
     - the rank state is SINGLE-USE per round: out-degrees ride on the
       EDGES (``edges_w``: src, dst, outdeg — checkpointed once), and
       the dangling-node left join reads a STATIC (node, outdeg) frame
@@ -179,9 +231,7 @@ def pagerank(
       because its round count is data-dependent and its state is
       multi-use; a fixed small iteration count does not need them.
       For large ``iters`` the loop cuts lineage every
-      ``_CHECKPOINT_EVERY`` rounds — without the guard the unrolled
-      join tower's Catalyst analysis cost grows superlinearly with
-      caller-supplied ``iters``; with it, plan depth is bounded while
+      ``_CHECKPOINT_EVERY`` rounds, so plan depth stays bounded while
       small-iters callers still pay zero checkpoints.)
     - the simple-citation formulation r' = (1-d) + d·Σ r/outdeg is
       used (no dangling-mass redistribution): sinks absorb rank,
@@ -189,8 +239,6 @@ def pagerank(
       contribution divides rank/outdeg PER EDGE, the same expression
       the oracle's unrolled CTEs evaluate.
     """
-    from ..functions.rounding import dround
-
     nodes = (
         edges.select(F.col("src").alias("node"))
         .unionByName(edges.select(F.col("dst").alias("node")))
@@ -210,78 +258,13 @@ def pagerank(
         .select("src", "dst", "outdeg")
         .localCheckpoint(eager=True)
     )
-    ranks = nodes_od.select("node", F.lit(1.0).alias("rank"))
-    for i in range(iters):
-        inflow = (
-            edges_w.join(ranks, edges_w["src"] == ranks["node"])
-            .select(
-                F.col("dst").alias("node"),
-                (F.col("rank") / F.col("outdeg")).alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("inflow"))
-        )
-        ranks = (
-            nodes_od.join(inflow, "node", "left")
-            .select(
-                "node",
-                dround(
-                    F.lit(1.0 - damping)
-                    + F.lit(damping) * F.coalesce("inflow", F.lit(0.0)),
-                    round_to,
-                ).alias("rank"),
-            )
-        )
-        if (i + 1) % _CHECKPOINT_EVERY == 0 and (i + 1) < iters:
-            ranks = ranks.localCheckpoint(eager=True)
-    return ranks.select("node", "rank")
-
-
-def personalized_pagerank(
-    edges: DataFrame,
-    seeds: list[str],
-    damping: float = 0.85,
-    iters: int = 3,
-    round_to: int = 6,
-) -> DataFrame:
-    """Personalized PageRank: teleport mass lands ONLY on ``seeds``
-    (r' = (1-d)·1[seed] + d·Σ r/outdeg; r0 = the teleport vector), so
-    rank concentrates in the seeds' neighborhoods — the recommendation
-    / similarity-expansion variant of :func:`pagerank`. Unnormalized
-    teleport (1 per seed, not 1/|S|) — deterministic and mirrored in
-    the oracle; relative ordering is unaffected.
-
-    Same scale shape as pagerank: single-use rank chain over the two
-    checkpointed static frames, no per-round materialization. Seeds
-    enter as literals (an isin over the node column) — the seed SET
-    is query-scoped and small by definition; seeds absent from the
-    graph contribute nothing on either engine.
-    """
-    from ..functions.rounding import dround
-
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    outdeg = edges.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).alias("outdeg")
-    )
-    nodes_od = (
-        nodes.join(outdeg, "node", "left")
-        .select("node", F.coalesce("outdeg", F.lit(0)).alias("outdeg"))
-        .localCheckpoint(eager=True)
-    )
-    edges_w = (
-        edges.join(outdeg.withColumnRenamed("node", "src"), "src")
-        .select("src", "dst", "outdeg")
-        .localCheckpoint(eager=True)
-    )
-    base = F.when(F.col("node").isin(*seeds), F.lit(1.0 - damping)).otherwise(
-        F.lit(0.0)
-    )
-    seed_one = F.when(F.col("node").isin(*seeds), F.lit(1.0)).otherwise(F.lit(0.0))
-    ranks = nodes_od.select("node", seed_one.alias("rank"))
+    if seeds is None:
+        teleport, rank0 = F.lit(1.0 - damping), F.lit(1.0)
+    else:
+        is_seed = F.col("node").isin(*seeds)
+        teleport = F.when(is_seed, F.lit(1.0 - damping)).otherwise(F.lit(0.0))
+        rank0 = F.when(is_seed, F.lit(1.0)).otherwise(F.lit(0.0))
+    ranks = nodes_od.select("node", rank0.alias("rank"))
     for i in range(iters):
         inflow = (
             edges_w.join(ranks, edges_w["src"] == ranks["node"])
@@ -295,33 +278,12 @@ def personalized_pagerank(
         ranks = nodes_od.join(inflow, "node", "left").select(
             "node",
             dround(
-                base + F.lit(damping) * F.coalesce("inflow", F.lit(0.0)),
+                teleport + F.lit(damping) * F.coalesce("inflow", F.lit(0.0)),
                 round_to,
             ).alias("rank"),
         )
-        if (i + 1) % _CHECKPOINT_EVERY == 0 and (i + 1) < iters:
-            ranks = ranks.localCheckpoint(eager=True)
+        ranks = _cut_lineage(ranks, i, iters)
     return ranks.select("node", "rank")
-
-
-def _symmetrize(edges: DataFrame, dedup: bool = True) -> DataFrame:
-    """Undirected view of a directed edge list: both orientations,
-    materialized once (multi-use across iteration rounds).
-
-    ``dedup=False`` skips the distinct — a full 2E shuffle — for
-    callers that can PROVE the mirror cannot collide: the input is
-    already distinct AND no reverse pair exists (e.g. a bipartite
-    graph whose two sides use disjoint id ranges, like the
-    customer-even / supplier-odd purchase graph). Neighbor-count
-    semantics (LPA) and min-relaxation (BFS) are both correct only
-    if the edge multiset is duplicate-free, so the flag is a
-    caller-supplied proof, not a tolerance."""
-    sym = edges.select("src", "dst").unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    if dedup:
-        sym = sym.distinct()
-    return sym.localCheckpoint(eager=True)
 
 
 def label_propagation(
@@ -343,11 +305,11 @@ def label_propagation(
     The constraint exists because the per-node argmax packs
     (count, label) into ONE bigint — ``cnt * 2**33 + lbl`` — so the
     round reduces with a plain max() that stays inside
-    HashAggregate with map-side partial aggregation. The first
-    version used max(struct(cnt, lbl)) over string labels: struct
-    and string aggregation buffers are not hash-aggregable, so
-    every round fell back to SortAggregate (full sort of the E-sized
-    count frame; measured 8-12s vs ~4s for the 3-round sf0.1 query),
+    HashAggregate with map-side partial aggregation. A
+    max(struct(cnt, lbl)) over string labels is not hash-aggregable
+    (struct and string aggregation buffers), so every round would
+    fall back to SortAggregate — a full sort of the E-sized count
+    frame, measured 8-12s vs ~4s for the 3-round sf0.1 query —
     exactly like a row_number window would.
 
     Scale shape: each round is one O(E) join (labels onto edges) +
@@ -360,7 +322,7 @@ def label_propagation(
     cores separate when a bridge node's neighbor majority points
     elsewhere."""
     shift = F.lit(2**33)
-    sym = _symmetrize(edges, dedup=edges_dedup)
+    sym = _symmetrize(edges.select("src", "dst"), dedup=edges_dedup)
     # loud preconditions for the packed argmax (silent violations
     # would return wrong communities, not errors): labels live in the
     # low 33 bits, counts in the high bits — so ids must sit in
@@ -395,128 +357,79 @@ def label_propagation(
             .agg(F.max(F.col("cnt") * shift + F.col("lbl")).alias("key"))
             .select("node", F.pmod(F.col("key"), shift).alias("lbl"))
         )
-        if (i + 1) % _CHECKPOINT_EVERY == 0 and (i + 1) < iters:
-            labels = labels.localCheckpoint(eager=True)
+        labels = _cut_lineage(labels, i, iters)
     return labels
 
 
-def bfs_hops(
-    edges: DataFrame,
-    seeds: list[str],
-    max_hops: int = 3,
-    edges_dedup: bool = True,
+def _relax(
+    sym: DataFrame, seeds: list, rounds: int, out: str, dtype: str, cost: Column
 ) -> DataFrame:
-    """Multi-source BFS hop distance over an UNDIRECTED edge list:
-    ``hops`` = length of the shortest path from any seed, up to
-    ``max_hops`` rounds; unreached nodes are dropped from the output
-    (at scale that is the point — k rounds from a small seed set touch
-    a local ball, the unreachable tail never materializes a row).
+    """Bounded multi-source Bellman-Ford over a symmetrized edge list:
+    seeds start at 0, every round relaxes every edge once with
+    ``cand = out + cost``, and nodes still unreached after ``rounds``
+    rounds are dropped (at scale that is the point — k rounds from a
+    small seed set touch a local ball, the unreachable tail never
+    materializes a row).
 
-    Each round relaxes every edge once: one O(E) join of the current
-    distance frame onto the symmetric edges, one min-aggregate per
-    destination, one left join back onto the (node, dist) state — the
-    dense Bellman-Ford-style relaxation (frontier-only would shuffle
-    less per round but needs a data-dependent stopping test; a fixed
-    small round count keeps the plan static and oracle-unrollable).
-    The NULL handling is explicit (CASE, not LEAST) because engines
-    disagree on LEAST's null semantics."""
-    sym = _symmetrize(edges, dedup=edges_dedup)
+    Each round is one O(E) join of the reachable frontier onto the
+    symmetric edges, one min-aggregate per destination, one left join
+    back onto the (node, ``out``) state — the dense relaxation
+    (frontier-only would shuffle less per round but needs a
+    data-dependent stopping test; a fixed small round count keeps the
+    plan static and oracle-unrollable). The NULL handling is explicit
+    (CASE, not LEAST) because engines disagree on LEAST's null
+    semantics."""
     nodes = sym.select(F.col("src").alias("node")).distinct()
-    dist = nodes.select(
-        "node",
-        F.when(F.col("node").isin(*seeds), F.lit(0))
-        .otherwise(F.lit(None))
-        .cast("int")
-        .alias("hops"),
-    )
-    for i in range(max_hops):
+    seed0 = F.when(F.col("node").isin(*seeds), F.lit(0)).otherwise(F.lit(None))
+    dist = nodes.select("node", seed0.cast(dtype).alias(out))
+    for i in range(rounds):
         relax = (
-            sym.join(
-                dist.filter(F.col("hops").isNotNull()),
-                sym["src"] == dist["node"],
-            )
-            .select(F.col("dst").alias("node"), (F.col("hops") + 1).alias("cand"))
+            sym.join(dist.filter(F.col(out).isNotNull()), sym["src"] == dist["node"])
+            .select(F.col("dst").alias("node"), (F.col(out) + cost).alias("cand"))
             .groupBy("node")
             .agg(F.min("cand").alias("cand"))
         )
         dist = dist.join(relax, "node", "left").select(
             "node",
-            F.when(F.col("hops").isNull(), F.col("cand"))
-            .when(F.col("cand").isNull(), F.col("hops"))
-            .otherwise(F.least("hops", "cand"))
-            .cast("int")
-            .alias("hops"),
+            F.when(F.col(out).isNull(), F.col("cand"))
+            .when(F.col("cand").isNull(), F.col(out))
+            .otherwise(F.least(out, "cand"))
+            .cast(dtype)
+            .alias(out),
         )
-        if (i + 1) % _CHECKPOINT_EVERY == 0 and (i + 1) < max_hops:
-            dist = dist.localCheckpoint(eager=True)
-    return dist.filter(F.col("hops").isNotNull())
+        dist = _cut_lineage(dist, i, rounds)
+    return dist.filter(F.col(out).isNotNull())
+
+
+def bfs_hops(
+    edges: DataFrame, seeds: list[str], max_hops: int = 3, edges_dedup: bool = True
+) -> DataFrame:
+    """Multi-source BFS hop distance over an UNDIRECTED edge list:
+    (node, ``hops`` int) = length of the shortest path from any seed,
+    up to ``max_hops`` rounds; unreached nodes are dropped. The
+    :func:`_relax` loop with a per-edge cost of 1."""
+    sym = _symmetrize(edges.select("src", "dst"), dedup=edges_dedup)
+    return _relax(sym, seeds, max_hops, "hops", "int", F.lit(1))
+
 
 def sssp(
-    edges: DataFrame,
-    seeds: list,
-    max_rounds: int = 3,
-    edges_dedup: bool = True,
+    edges: DataFrame, seeds: list, max_rounds: int = 3, edges_dedup: bool = True
 ) -> DataFrame:
     """Weighted multi-source shortest-path distance (bounded
     Bellman-Ford) over an UNDIRECTED weighted edge list (src, dst, w):
-    ``dist`` = minimum total edge weight from any seed along paths of
-    at most ``max_rounds`` edges; unreached nodes are dropped (the
-    :func:`bfs_hops` scale argument — k rounds from a small seed set
-    touch a local ball, the unreachable tail never materializes).
+    (node, ``dist`` bigint) = minimum total edge weight from any seed
+    along paths of at most ``max_rounds`` edges; unreached nodes are
+    dropped. The :func:`_relax` loop with a per-edge cost of ``w``.
 
-    The weighted generalization of :func:`bfs_hops`: each round
-    relaxes every edge once (one O(E) join of the reachable frontier
-    onto the symmetric edges, one min-aggregate per destination, one
-    left join back onto the (node, dist) state); ``cand = dist + w``
-    instead of ``hops + 1``. Weights must be non-negative — bounded
-    Bellman-Ford is still *correct* for negative weights within the
-    round budget, but "shortest within k hops" stops being a useful
-    distance there. Integer weights keep both engines bit-exact with
-    nothing to round.
+    Weights must be non-negative — bounded Bellman-Ford is still
+    *correct* for negative weights within the round budget, but
+    "shortest within k hops" stops being a useful distance there.
+    Integer weights keep both engines bit-exact with nothing to round.
 
-    ``edges_dedup=False`` is the caller's proof that the mirrored
-    edge multiset is already duplicate-free (see ``_symmetrize``);
-    parallel edges with DIFFERENT weights are always legal — the
-    min-aggregate keeps the cheapest — it is only exact duplicate
-    orientations that would be double-counted by LPA-style callers
-    (min-relaxation itself is idempotent, so even those are harmless
-    here; the flag just skips a full 2E shuffle)."""
-    sym = edges.select("src", "dst", "w").unionByName(
-        edges.select(
-            F.col("dst").alias("src"), F.col("src").alias("dst"), F.col("w")
-        )
-    )
-    if edges_dedup:
-        sym = sym.groupBy("src", "dst").agg(F.min("w").alias("w"))
-    sym = sym.localCheckpoint(eager=True)
-    nodes = sym.select(F.col("src").alias("node")).distinct()
-    dist = nodes.select(
-        "node",
-        F.when(F.col("node").isin(*seeds), F.lit(0))
-        .otherwise(F.lit(None))
-        .cast("bigint")
-        .alias("dist"),
-    )
-    for i in range(max_rounds):
-        relax = (
-            sym.join(
-                dist.filter(F.col("dist").isNotNull()),
-                sym["src"] == dist["node"],
-            )
-            .select(
-                F.col("dst").alias("node"), (F.col("dist") + F.col("w")).alias("cand")
-            )
-            .groupBy("node")
-            .agg(F.min("cand").alias("cand"))
-        )
-        dist = dist.join(relax, "node", "left").select(
-            "node",
-            F.when(F.col("dist").isNull(), F.col("cand"))
-            .when(F.col("cand").isNull(), F.col("dist"))
-            .otherwise(F.least("dist", "cand"))
-            .cast("bigint")
-            .alias("dist"),
-        )
-        if (i + 1) % _CHECKPOINT_EVERY == 0 and (i + 1) < max_rounds:
-            dist = dist.localCheckpoint(eager=True)
-    return dist.filter(F.col("dist").isNotNull())
+    ``edges_dedup`` drops exact duplicate (src, dst, w) rows after
+    mirroring; ``False`` skips that 2E shuffle. Min-relaxation is
+    idempotent, so duplicates — and parallel edges with different
+    weights, of which the min-aggregate keeps the cheapest — never
+    change a distance either way."""
+    sym = _symmetrize(edges.select("src", "dst", "w"), dedup=edges_dedup)
+    return _relax(sym, seeds, max_rounds, "dist", "bigint", F.col("w"))

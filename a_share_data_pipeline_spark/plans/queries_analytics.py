@@ -64,8 +64,8 @@ def purchase_iedges(spark: SparkSession, sf_dir: str) -> DataFrame:
     parities make the bipartite mirror provably collision-free
     (edges_dedup=False). :func:`decode_purchase_node` is the inverse;
     the pair is THE encode/decode bijection — change both or neither
-    (graph_label_propagation, graph_pagerank and
-    graph_pagerank_personalized all ride it)."""
+    (graph_label_propagation and both PageRank queries — operators/
+    graph.pagerank with and without seeds — ride it)."""
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
     return (

@@ -2423,8 +2423,8 @@ SELECT node, pr FROM {prev} WHERE pr > 0
         "set (r' = (1-d)·1[seed] + d·Σ r/outdeg, r0 = the teleport "
         "vector), so rank concentrates in the seeds' purchase "
         "neighborhood: the recommendation / similarity-expansion "
-        "variant of graph_pagerank (operators/graph."
-        "personalized_pagerank). Same single-use rank chain over two "
+        "variant of graph_pagerank (operators/graph.pagerank with "
+        "seeds). Same single-use rank chain over two "
         "checkpointed static frames, no per-round materialization; "
         "seeds enter as literals. Emitting only pr > 0 keeps the "
         "output the REACHED neighborhood, not the whole graph — at "
@@ -2433,15 +2433,15 @@ SELECT node, pr FROM {prev} WHERE pr > 0
     ),
 )
 def graph_pagerank_personalized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.graph import personalized_pagerank
+    from ..operators.graph import pagerank
 
     # shared int64 encode/decode bijection (queries_analytics); the
     # seed literals encode with the identical c -> 2c rule
     from .queries_analytics import decode_purchase_node, purchase_iedges
 
     iseeds = [2 * int(s[1:]) for s in _PPR_SEEDS]
-    pr = personalized_pagerank(
-        purchase_iedges(spark, sf_dir), seeds=iseeds, damping=_PPR_D, iters=3
+    pr = pagerank(
+        purchase_iedges(spark, sf_dir), damping=_PPR_D, iters=3, seeds=iseeds
     )
     return pr.filter(F.col("rank") > 0).select(
         decode_purchase_node("node").alias("node"), F.col("rank").alias("pr")

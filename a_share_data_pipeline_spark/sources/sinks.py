@@ -150,14 +150,3 @@ class LocalDirPublisher(Publisher):
 
     def exists(self, repo_path: str) -> bool:
         return os.path.exists(os.path.join(self.repo_dir, repo_path))
-
-
-class HubPublisher(Publisher):  # pragma: no cover - network client not in container
-    """Real-hub stub: the huggingface_hub client is an external
-    dependency, deliberately outside the engine (SURVEY.md §2.1 S11)."""
-
-    def __init__(self, repo_id: str):
-        self.repo_id = repo_id
-
-    def upload(self, local_path: str, repo_path: str) -> None:
-        raise NotImplementedError("hub client not available in this environment")

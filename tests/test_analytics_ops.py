@@ -164,8 +164,8 @@ def test_sssp_round_budget_bounds_path_length(spark):
 
 
 def test_sssp_parallel_edges_keep_cheapest(spark):
-    """Duplicate (a, b) edges with different weights: the dedup
-    min-fold must keep w=3, not double-count or pick arbitrarily."""
+    """Duplicate (a, b) edges with different weights: the relaxation's
+    min-aggregate must keep w=3, not double-count or pick arbitrarily."""
     from a_share_data_pipeline_spark.operators.graph import sssp
 
     e = spark.createDataFrame(
