@@ -85,24 +85,37 @@ def delta_flow(
     date-range filter on each fact scan — at scale this is static
     partition pruning to exactly the pending date partitions.
 
+    The assembled delta is pinned once (eager local checkpoint): the
+    emptiness check, the staging append and the merge all read it, and
+    each would otherwise re-run the scans and joins that build it.
+
     mode='compat' (default) keeps reference semantics on purpose:
     published = old UNION ALL new with NO dedup (U1 — a crash rerun
     duplicates rows), and late rows before the watermark are lost
-    forever (§2.9).
+    forever (§2.9). It has no slack window, so `slack_days` must be 0.
 
     mode='merge' is the strictly-better upgrade the reference can't do:
-    the delta window re-opens `slack_days` behind the watermark (so a
-    source backfilling a recent past date is picked up), and the
-    publish is an idempotent key-merge — reruns and the re-read slack
-    window dedup on (code, date), delta rows winning."""
+    the delta window re-opens `slack_days` (>= 0) behind the watermark
+    (so a source backfilling a recent past date is picked up), and the
+    publish is an idempotent key-merge on (code, date), delta rows
+    winning: published rows the delta does not replace keep their order
+    and the delta follows them (`merge_increment`).
+
+    Raises ValueError on an unknown mode, a missing watermark, or a
+    `slack_days` the mode cannot honour: negative in merge mode would
+    start the window past the watermark and skip days for good."""
     if mode not in ("compat", "merge"):
         raise ValueError(f"unknown mode: {mode}")
+    if slack_days < 0:
+        raise ValueError(f"slack_days must be >= 0, got {slack_days}")
+    if mode == "compat" and slack_days:
+        raise ValueError("slack_days needs mode='merge'; compat mode has no slack window")
     wm = watermark.read()
     if wm is None:
         raise ValueError("delta flow needs an existing watermark")
     from datetime import timedelta
 
-    slack_from = wm - timedelta(days=slack_days) if mode == "merge" else wm
+    slack_from = wm - timedelta(days=slack_days)
     lo = F.lit(slack_from.strftime("%Y%m%d"))
     hi = F.lit(end.strftime("%Y%m%d"))
     in_range = lambda df: df.filter(  # noqa: E731
@@ -124,7 +137,7 @@ def delta_flow(
         in_range_cal(daily_basic),
         stock_basic,
         mode="delta",  # inner dim join doubles as the main-board filter (J3)
-    )
+    ).localCheckpoint(eager=True)
     if delta.isEmpty():  # P6: no new rows → no publish, no advance
         return None
 

@@ -55,8 +55,10 @@ def _concat_into(parts: Iterable[str], target: str, mode: str, header: str | Non
 
 
 def append_csv(df: DataFrame, path: str) -> None:
-    """S9: append rows to ONE csv file; write the header only if the
-    file does not exist yet (reference header-once semantics).
+    """S9: append rows to ONE csv file; write the header only on the
+    first write (reference header-once semantics). A missing file and
+    an empty one (left by an interrupted first write) are both a first
+    write: an empty file holds no header for the rows to follow.
 
     Partition part-files are streamed into the target without a driver
     collect; ordering across partitions is unspecified, as in any
@@ -64,7 +66,7 @@ def append_csv(df: DataFrame, path: str) -> None:
     its order is an artifact of the driver loop, not a contract).
     """
     os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    first_write = not os.path.exists(path)  # header_once predicate
+    first_write = not os.path.exists(path) or os.path.getsize(path) == 0
     with tempfile.TemporaryDirectory(dir=os.path.dirname(path) or ".") as tmp:
         parts = _write_headerless_csv_dir(df, os.path.join(tmp, "stage"))
         header = ",".join(df.columns) if first_write else None

@@ -16,8 +16,9 @@ holds its building blocks):
   table. `delta_slice` is the same window over a timestamp column,
 - merge modes: 'compat' reproduces the reference's UNION ALL (a crash
   rerun can duplicate (code,date) rows — documented semantics,
-  SURVEY.md §2.4 U1); 'merge' is the idempotent upgrade
-  (dropDuplicates on the key, last-writer-wins),
+  SURVEY.md §2.4 U1); 'merge' is the idempotent upgrade, delta wins:
+  the history is anti-joined against the broadcast delta keys and the
+  delta appended, so the published table is never shuffled,
 - `WatermarkStore` advances only after the sink succeeds, mirroring
   the reference's ordering (upload, then watermark).
 
@@ -31,6 +32,8 @@ from __future__ import annotations
 
 import os
 from datetime import date, datetime
+from functools import reduce
+from operator import and_
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -74,22 +77,27 @@ def merge_increment(
     mode: str = "compat",
 ) -> DataFrame:
     """U1: 'compat' = bag UNION ALL (reference semantics, duplicates
-    possible on rerun); 'merge' = idempotent, delta wins on key clash."""
+    possible on rerun); 'merge' = idempotent, delta wins on key clash.
+
+    Merge mode drops the existing rows whose key the delta carries
+    (a left anti-join against the broadcast delta keys) and appends
+    the delta. The delta is the small side — a date window — so the
+    history is streamed once in its own partitioning: no shuffle, no
+    sort, and its rows keep their order with the delta after them, as
+    the reference's `pd.concat([existing, new])` does. Keys compare
+    null-safely, so a null key clashes with a null key.
+
+    Duplicates of one key WITHIN a side are not collapsed: existing
+    duplicates (a history written in compat mode) pass through unless
+    the delta carries their key, and delta duplicates all land."""
     if mode == "compat":
         return existing.unionByName(delta)
     if mode == "merge":
         if not keys:
             raise ValueError("merge mode requires keys")
-        marked = existing.withColumn("__gen", F.lit(0)).unionByName(
-            delta.withColumn("__gen", F.lit(1))
-        )
-        w_cols = [F.col(k) for k in keys]
-        from pyspark.sql import Window as W
-
-        w = W.partitionBy(*w_cols).orderBy(F.col("__gen").desc())
-        return (
-            marked.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn", "__gen")
-        )
+        # the delta's key columns are renamed so the join condition
+        # cannot resolve against `existing` when both share a lineage
+        incoming = F.broadcast(delta.select(*[F.col(k).alias(f"__delta_{k}") for k in keys]))
+        clash = reduce(and_, [F.col(k).eqNullSafe(F.col(f"__delta_{k}")) for k in keys])
+        return existing.join(incoming, clash, "left_anti").unionByName(delta)
     raise ValueError(f"unknown mode: {mode}")
