@@ -11,6 +11,16 @@ unchanged on a 1000-executor cluster:
 - shuffle.partitions sized from the env (driver runs local[$SPARK_GRAFT_CPUS]);
   on a real cluster AQE coalesces from a higher initial number.
 - session timezone UTC so timestamp semantics match the DuckDB oracle.
+
+The width rule: a phase whose data is far smaller than the cluster runs
+on a ``spark.newSession()`` clone narrowed by :func:`narrow` to
+``min(clone width, max(8, ceil(rows / 65536)))``. Work is sized to its
+data, not to the CPU count, so small shuffles and streaming state
+stores do not pay one scheduled task (or one state-store commit) per
+core; at scale the row count dominates and the clone keeps its full
+width. Narrowing never widens. Only the clone changes: a query never
+sets a conf on its caller's session, so concurrent queries on one
+session cannot see each other's sizing.
 """
 
 from __future__ import annotations
@@ -19,6 +29,10 @@ import os
 
 from pyspark.sql import SparkSession
 
+_SHUFFLE_WIDTH = "spark.sql.shuffle.partitions"
+_MIN_WIDTH = 8
+_ROWS_PER_PARTITION = 65536
+
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8)))
@@ -26,7 +40,6 @@ def default_parallelism() -> int:
 
 def get_spark(
     app_name: str = "a_share_data_pipeline_spark",
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) the engine's SparkSession."""
@@ -34,7 +47,7 @@ def get_spark(
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
+        .config(_SHUFFLE_WIDTH, str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -59,3 +72,18 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def narrow(work: SparkSession, rows: int = 0) -> SparkSession:
+    """Apply the width rule to ``work`` and return it.
+
+    ``work`` must be a clone the caller owns (``spark.newSession()``):
+    its shuffle width becomes ``min(width, max(8, ceil(rows / 65536)))``.
+    ``rows`` is the row count of the phase's largest shuffled input;
+    the default 0 gives the floor, for phases (micro-batches, state
+    stores) that are small by construction. Results never depend on the
+    width, only the task count does."""
+    width = int(work.conf.get(_SHUFFLE_WIDTH))
+    sized = max(_MIN_WIDTH, -(-rows // _ROWS_PER_PARTITION))
+    work.conf.set(_SHUFFLE_WIDTH, str(min(width, sized)))
+    return work

@@ -152,27 +152,23 @@ def run_available_now(
     result: DataFrame,
     checkpoint_dir: str,
     output_mode: str = "append",
-    sink_format: str = "memory",
     query_name: str = "stream_q",
-    out_path: str | None = None,
 ):
-    """Execute one AvailableNow cycle to completion — the streaming
-    analog of one reference cron run (T2/T4). The checkpoint dir is the
-    watermark: re-running with the same dir processes only new files.
+    """Execute one AvailableNow cycle to completion into the memory
+    table ``query_name`` — the streaming analog of one reference cron
+    run (T2/T4). The checkpoint dir is the watermark: re-running with
+    the same dir processes only new files.
     Returns the (terminated) StreamingQuery so callers can read its
     progress records — per-micro-batch `stateOperators` metrics are how
     tests prove state actually expires under a watermark."""
-    writer = (
+    q = (
         result.writeStream.outputMode(output_mode)
         .trigger(availableNow=True)
         .option("checkpointLocation", checkpoint_dir)
-        .format(sink_format)
+        .format("memory")
+        .queryName(query_name)
+        .start()
     )
-    if sink_format == "memory":
-        writer = writer.queryName(query_name)
-    if out_path is not None:
-        writer = writer.option("path", out_path)
-    q = writer.start()
     q.awaitTermination()
     return q
 

@@ -1447,18 +1447,12 @@ def test_sample_negatives_never_plans_cartesian(spark):
 
 
 def test_round13_width_clones_leave_caller_width_untouched(spark):
-    """Measured-width clones (graph_pagerank + cc_incremental; the
-    r13 graph_label_propagation clone was REVERTED in round 14 —
-    the driver's r13 record and the r14 fresh-subprocess interleaved
-    A/B both read it slower, VERDICT r13 item 3 / OPTIMIZATION_r14.md;
-    bfs/kcore/closeness/components were measured net-negative in the
-    applied form and deliberately left alone, OPTIMIZATION_r13.md §6):
-    each runs its iterative rounds in a CLONED session whose shuffle
-    width is sized from the measured edge/pair count. The caller's
-    width must never move, and at smoke scale (counts far below
-    8·64Ki) the clone must land exactly on the volume rule's floor of
-    8 — proving the sizing really derives from the data, not the CPU
-    count."""
+    """Queries that narrow a clone with ``session.narrow``: the graph
+    queries size it from their edge count, the memory-sink streams use
+    the floor. The returned frame lives on the clone, the caller's
+    width never moves, and at smoke scale (counts far below 8·64Ki)
+    the clone lands exactly on the rule's floor of 8 — the width
+    derives from the data, not the CPU count."""
     from a_share_data_pipeline_spark.plans.catalog import registry
 
     pkey = "spark.sql.shuffle.partitions"
@@ -1469,6 +1463,9 @@ def test_round13_width_clones_leave_caller_width_untouched(spark):
         for name in (
             "graph_pagerank",
             "graph_cc_incremental",
+            "stream_dedup",
+            "stream_stream_join",
+            "stream_stream_join_outer",
         ):
             out = reg[name].fn(spark, SF)
             assert out.sparkSession is not spark, name
@@ -1477,3 +1474,47 @@ def test_round13_width_clones_leave_caller_width_untouched(spark):
             assert spark.conf.get(pkey) == "12", name
     finally:
         spark.conf.set(pkey, before)
+
+
+def test_narrow_sizes_a_clone_and_never_widens(spark):
+    """The width rule min(width, max(8, ceil(rows/65536))) on a clone:
+    the floor for small inputs, the row count for large ones, never
+    wider than the clone already was, and the caller never moves."""
+    from a_share_data_pipeline_spark.session import narrow
+
+    pkey = "spark.sql.shuffle.partitions"
+    caller = spark.conf.get(pkey)
+
+    def narrowed(width: int, rows: int = 0) -> str:
+        work = spark.newSession()
+        work.conf.set(pkey, str(width))
+        assert narrow(work, rows) is work
+        return work.conf.get(pkey)
+
+    assert narrowed(12) == "8"
+    # the sf0.1 edge count of graph_pagerank and graph_cc_incremental
+    assert narrowed(32, 586_871) == "9"
+    assert narrowed(4) == "4"
+    assert narrowed(4, 10**9) == "4"
+    assert spark.conf.get(pkey) == caller
+
+
+def test_only_session_module_sets_session_conf():
+    """Session conf is written in one module: ``session.py`` (the
+    builder and the width rule) plus the two defensive read confs in
+    ``sources/readers.py``. A query that set conf on its caller's
+    session would leak into concurrent queries on that session."""
+    import pathlib
+
+    import a_share_data_pipeline_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    allowed = {root / "session.py", root / "sources" / "readers.py"}
+    offenders = [
+        f"{path.relative_to(root)}:{n}"
+        for path in sorted(root.rglob("*.py"))
+        if path not in allowed
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if "conf.set(" in line
+    ]
+    assert not offenders, offenders
